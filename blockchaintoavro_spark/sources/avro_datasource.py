@@ -28,14 +28,24 @@ Scale design:
   ``partition_col`` is set), so write parallelism is the upstream
   partitioning and nothing shuffles.
 
-Options: ``partition_col`` (hive dir key), ``partition_type`` (``long``
-default / ``string``), ``codec`` (``deflate`` default / ``null`` /
-``snappy``).
+Options:
+- ``partition_col``: hive directory key (``{col}={val}/``); a null value
+  is written to and read back from ``__HIVE_DEFAULT_PARTITION__``.
+- ``partition_type``: type of the partition column on read, ``long``
+  (default) or ``string``.
+- ``split_size``: read split size in bytes (default 128 MiB); larger
+  files are read as several sync-aligned byte ranges.
+- ``codec``: write codec, ``deflate`` (default), ``null``, ``snappy``,
+  ``bzip2``, ``xz`` or ``zstandard`` (needs the system libzstd).
+
+The task-side read and write kernels are shared with
+``avro_io.read_ocf_dataset``/``write_ocf_dataset``
+(``avro_io._read_ocf_batches``/``_write_ocf_files``); this module adds
+only planning, pruning and the ``_SUCCESS`` commit protocol.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -61,12 +71,15 @@ from pyspark.sql.datasource import (
 )
 
 from .avro_io import (
-    OCFWriter,
     _fs_open,
+    _fs_size,
+    _local_files,
     _pafs_glob_uris,
+    _part_value,
+    _read_ocf_batches,
     _split_scheme,
+    _write_ocf_files,
     avro_to_spark_schema,
-    iter_ocf_blocks_split,
     read_ocf_header,
     spark_to_avro_schema,
 )
@@ -78,17 +91,7 @@ FORMAT_NAME = "avro_ocf"
 # 128 MiB matches spark.sql.files.maxPartitionBytes' default — the same
 # granularity the parquet scans get.
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
-
-# Hive's directory name for a null partition value; int("None") would make
-# the whole dataset unreadable if a null ever reached the writer.
-NULL_PARTITION_DIR = "__HIVE_DEFAULT_PARTITION__"
 MANIFEST = "_SUCCESS"
-
-
-def _part_value(raw: str, ptype: str) -> Any:
-    if raw == NULL_PARTITION_DIR:
-        return None
-    return int(raw) if ptype == "long" else raw
 
 
 def _manifest_paths(path: str) -> set[str] | None:
@@ -140,12 +143,6 @@ def _list_files(
     producer is the rotated sink, which appends files without touching
     any manifest — filtering by a stale manifest would freeze the stream
     at whatever the last batch job committed."""
-    def _sz(f: str) -> int:
-        try:
-            return os.path.getsize(f)
-        except OSError:
-            return 0  # vanished/unstatable: one whole-file partition
-
     if _split_scheme(path)[0] is not None:
         # URI dataset: enumerate through pyarrow.fs (the DataSource
         # driver process has no JVM handle for a Hadoop listing); paths
@@ -154,30 +151,12 @@ def _list_files(
         # every file in _plan_splits would double the remote metadata
         # round-trips.
         listed = _pafs_glob_uris(path, partition_col)
-        if partition_col:
-            out = [
-                (
-                    f,
-                    _part_value(
-                        os.path.basename(os.path.dirname(f)).split("=", 1)[1],
-                        ptype,
-                    ),
-                    sz,
-                )
-                for f, sz in listed
-            ]
-        else:
-            out = [(f, None, sz) for f, sz in listed]
-    elif partition_col:
-        out = []
-        for f in sorted(glob.glob(os.path.join(path, f"{partition_col}=*", "*.avro"))):
-            raw = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
-            out.append((f, _part_value(raw, ptype), _sz(f)))
     else:
-        out = [
-            (f, None, _sz(f))
-            for f in sorted(glob.glob(os.path.join(path, "*.avro")))
-        ]
+        listed = _local_files(path, partition_col)
+    out = [
+        (f, _part_value(f, ptype) if partition_col else None, sz)
+        for f, sz in listed
+    ]
     committed = _manifest_paths(path) if use_manifest else None
     if committed is not None:
         # Manifest entries are dataset-relative today, but earlier writer
@@ -245,8 +224,8 @@ def _plan_splits(
     multiple ranges that the reader aligns on sync markers; with
     ``pack=True`` small whole files are greedily binned into
     :class:`_PackedPartition` tasks under Spark's own
-    size-plus-open-cost rule (r16, guide §6). The driver only stats
-    file sizes — no file content is touched here."""
+    size-plus-open-cost rule. The driver only stats file sizes — no
+    file content is touched here."""
     parts: list[InputPartition] = []
     small: list[_FilePartition] = []
     budget = 0
@@ -256,8 +235,6 @@ def _plan_splits(
             size = item[2]
         else:  # stream partitions() hands bare (path, value) pairs
             try:
-                from .avro_io import _fs_size
-
                 size = _fs_size(p)
             except (OSError, TypeError):
                 size = 0  # vanished/unstatable: one whole-file partition
@@ -278,34 +255,29 @@ def _plan_splits(
     return parts
 
 
-def _read_file_partition(
-    schema: T.StructType, pcol: str | None, partition: "_FilePartition"
+def _read_partition(
+    schema: T.StructType, pcol: str | None, partition: InputPartition
 ) -> Iterator[Any]:
-    """Shared batch/stream partition read: one byte-range split of one
-    OCF file → one Arrow batch per data block, so executor memory is
-    bounded by a block (the writer's own granularity) even for multi-GB
-    files. Splits align on the 16-byte sync markers (avro_io.py), so a
-    split never sees a torn block."""
-    import pyarrow as pa
+    """Shared batch/stream partition read through
+    :func:`avro_io._read_ocf_batches`. Splits align on the 16-byte sync
+    markers, so a split never sees a torn block."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from blockchaintoavro_spark.sources.avro_io import spark_to_avro_schema
-
-    arrow_schema = to_arrow_schema(schema)
+    items = (
+        partition.items
+        if isinstance(partition, _PackedPartition)
+        else (partition,)
+    )
     # evolved-reader support: resolve each file against the EXPECTED avro
     # schema (derived from the read schema, e.g. a user-supplied
     # .schema(...)); files written with that exact schema skip resolution
     data_schema = T.StructType([f for f in schema.fields if f.name != pcol])
-    reader_avro = spark_to_avro_schema(data_schema)
-    end: float = partition.end if partition.end >= 0 else float("inf")
-    for _, block in iter_ocf_blocks_split(
-        partition.path, partition.start, end, reader_avro
-    ):
-        if pcol:
-            for r in block:
-                r[pcol] = partition.part_value
-        if block:
-            yield from pa.Table.from_pylist(block, schema=arrow_schema).to_batches()
+    return _read_ocf_batches(
+        ((fp.path, fp.part_value, fp.start, fp.end) for fp in items),
+        to_arrow_schema(schema),
+        pcol,
+        spark_to_avro_schema(data_schema),
+    )
 
 
 class AvroOCFReader(DataSourceReader):
@@ -358,11 +330,7 @@ class AvroOCFReader(DataSourceReader):
         return _plan_splits(self._files, self._split_size, pack=True)
 
     def read(self, partition: InputPartition) -> Iterator[Any]:
-        if isinstance(partition, _PackedPartition):
-            for fp in partition.items:
-                yield from _read_file_partition(self._schema, self._pcol, fp)
-            return
-        yield from _read_file_partition(self._schema, self._pcol, partition)
+        return _read_partition(self._schema, self._pcol, partition)
 
 
 class AvroOCFStreamReader(DataSourceStreamReader):
@@ -403,19 +371,16 @@ class AvroOCFStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         new = sorted(set(end["files"]) - set(start["files"]))
-        files = []
-        for p in new:
-            if self._pcol:
-                raw = os.path.basename(os.path.dirname(p)).split("=", 1)[1]
-                files.append((p, _part_value(raw, self._ptype)))
-            else:
-                files.append((p, None))
+        files = [
+            (p, _part_value(p, self._ptype) if self._pcol else None)
+            for p in new
+        ]
         # A micro-batch that picks up one huge rotated file still fans
         # out across executors — same sync-aligned splits as batch.
         return _plan_splits(files, self._split_size)
 
     def read(self, partition: _FilePartition) -> Iterator[Any]:
-        return _read_file_partition(self._schema, self._pcol, partition)
+        return _read_partition(self._schema, self._pcol, partition)
 
     def commit(self, end: dict) -> None:
         pass  # files are immutable once rotated; nothing to release
@@ -451,7 +416,6 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
             [f for f in schema.fields if f.name != self._pcol]
         )
         self._avro_schema = spark_to_avro_schema(data_schema)
-        self._col_names = [f.name for f in schema.fields]
         # runs on the driver before any task: make overwrite atomic-enough
         # (same contract as the parquet overwrite mode dq23 exercises)
         if overwrite and os.path.isdir(self._path):
@@ -459,42 +423,19 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         os.makedirs(self._path, exist_ok=True)
 
     def write(self, iterator: Iterator[Any]) -> _Committed:
-        """Executor-side: one container file per (task, partition value).
-        Bytes go to a per-attempt tmp file, atomically renamed at the
-        end — a failed attempt leaves only a tmp the reader never lists
-        (the manifest names committed files only), and duplicate
-        speculative attempts cannot interleave into one file."""
+        """Executor-side: one container file per (task, partition value)
+        through :func:`avro_io._write_ocf_files`; only files this attempt
+        completed reach the manifest."""
         from pyspark import TaskContext
 
         tid = TaskContext.get().taskAttemptId()
-        writers: dict[Any, tuple[Any, OCFWriter, str, str]] = {}
-        for batch in iterator:
-            by_key: dict[Any, list[dict]] = {}
-            for row in batch.to_pylist():
-                key = row.pop(self._pcol) if self._pcol else None
-                by_key.setdefault(key, []).append(row)
-            for key, rows in by_key.items():
-                if key not in writers:
-                    dname = NULL_PARTITION_DIR if key is None else key
-                    d = (
-                        os.path.join(self._path, f"{self._pcol}={dname}")
-                        if self._pcol
-                        else self._path
-                    )
-                    os.makedirs(d, exist_ok=True)
-                    fpath = os.path.join(
-                        d, f"part-{self._job_token}-{tid:05d}.avro"
-                    )
-                    tmp = f"{fpath}.tmp"
-                    fh = open(tmp, "wb")
-                    writers[key] = (fh, OCFWriter(fh, self._avro_schema, self._codec), fpath, tmp)
-                writers[key][1].append(rows)  # one OCF block per batch
-        files = []
-        for fh, w, fpath, tmp in writers.values():
-            fh.close()
-            os.replace(tmp, fpath)
-            files.append((os.path.relpath(fpath, self._path), w.n_records))
-        return _Committed(tuple(files))
+        written = _write_ocf_files(
+            iterator, self._path, self._pcol, self._avro_schema,
+            self._codec, f"part-{self._job_token}-{tid:05d}.avro",
+        )
+        return _Committed(
+            tuple((os.path.relpath(f, self._path), n) for _k, f, n in written)
+        )
 
     def commit(self, messages: List[_Committed | None]) -> None:
         """Write the manifest of committed (dataset-relative) files.

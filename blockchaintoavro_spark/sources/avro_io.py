@@ -41,6 +41,7 @@ and record-name/alias matching are out of scope and raise.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import glob
 import io
@@ -302,17 +303,15 @@ def _append_long(buf: bytearray, n: int) -> None:
 
 def _compile_encoder(schema: Any):
     """Schema-specialized encoder: ``enc(buf: bytearray, v)`` appending
-    exactly the bytes :func:`_encode` writes (r17, guide §4.2 applied to
-    the OCF ENCODE path — VERDICT r16 #3).
+    exactly the bytes :func:`_encode` writes.
 
     :func:`_encode` re-walks the schema tree and re-dispatches on
-    isinstance per VALUE — 1.4 M interpreter-level dispatches to encode
-    2,000 nested block rows (measured 2.4 s, ~70% of the rotated sink's
-    write CPU). Compiling the dispatch ONCE per schema into a closure
-    tree removes every per-value schema inspection; the byte recipe per
-    node is copied verbatim from ``_encode``, so output is bit-identical
-    by construction and property-pinned against the retained ``_encode``
-    reference (tests/test_avro.py::test_compiled_encoder_bit_match)."""
+    isinstance per VALUE. Compiling the dispatch ONCE per schema into a
+    closure tree removes every per-value schema inspection; the byte
+    recipe per node is copied verbatim from ``_encode``, so output is
+    bit-identical by construction and property-pinned against the
+    retained ``_encode`` reference
+    (tests/test_avro.py::test_compiled_encoder_bit_match)."""
     if isinstance(schema, list):  # union — branch chosen by value nullness
         null_idx = schema.index("null")
         branch_idx = next(i for i, s in enumerate(schema) if s != "null")
@@ -401,7 +400,9 @@ def _compile_encoder(schema: Any):
             enc_item = _compile_encoder(schema["items"])
 
             def enc_array(buf, v):
-                if v:
+                # ``is not None`` then list(), as _encode: truthiness
+                # would raise on a numpy array
+                if v is not None:
                     items = list(v)
                     if items:  # non-empty after list(): one block
                         _append_long(buf, len(items))
@@ -414,7 +415,7 @@ def _compile_encoder(schema: Any):
             enc_val = _compile_encoder(schema["values"])
 
             def enc_map(buf, v):
-                if v:
+                if v is not None:
                     entries = dict(v)
                     if entries:
                         _append_long(buf, len(entries))
@@ -1055,6 +1056,39 @@ def _fs_size(path: str, filesystem=None) -> int:
     return int(fs.get_file_info(internal).size)
 
 
+def _fs_makedirs(path: str, filesystem=None) -> None:
+    """``mkdir -p`` through the same three-way resolution."""
+    if filesystem is not None:
+        filesystem.create_dir(path, recursive=True)
+    elif _split_scheme(path)[0] is None:
+        os.makedirs(path, exist_ok=True)
+    else:
+        fs, internal = _pafs_resolve(path)
+        fs.create_dir(internal, recursive=True)
+
+
+def _fs_create(path: str, filesystem=None):
+    """Binary writer for a new file through the same resolution."""
+    if filesystem is not None:
+        return filesystem.open_output_stream(path, compression=None)
+    if _split_scheme(path)[0] is None:
+        return open(path, "wb")
+    fs, internal = _pafs_resolve(path)
+    return fs.open_output_stream(internal, compression=None)
+
+
+def _fs_move(src: str, dst: str, filesystem=None) -> None:
+    """Rename ``src`` onto ``dst`` (atomic locally and on HDFS; object
+    stores copy+delete — see :func:`write_ocf_dataset`)."""
+    if filesystem is not None:
+        filesystem.move(src, dst)
+    elif _split_scheme(src)[0] is None:
+        os.replace(src, dst)
+    else:
+        fs, src_int = _pafs_resolve(src)
+        fs.move(src_int, _pafs_resolve(dst)[1])
+
+
 def _uri_str(jpath) -> str:
     """Hadoop ``Path`` → engine path string: ``file:``/scheme-less URIs
     become plain local paths (executors then use builtin ``open``);
@@ -1099,7 +1133,7 @@ def _pafs_glob(
     from pyarrow import fs as pafs
 
     if partition_col and partition_values is not None:
-        dirs = [f"{path}/{partition_col}={v}" for v in partition_values]
+        dirs = [f"{path}/{_part_dir(partition_col, v)}" for v in partition_values]
     elif partition_col:
         dirs = [
             i.path
@@ -1142,6 +1176,46 @@ def _pafs_glob_uris(
     ]
 
 
+# Hive's directory name for a null partition value: a ``{col}=None`` dir
+# would make the whole dataset unreadable (``int("None")``).
+NULL_PARTITION_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _part_dir(partition_col: str, value: Any) -> str:
+    return f"{partition_col}={NULL_PARTITION_DIR if value is None else value}"
+
+
+def _part_value(path: str, ptype: str = "long") -> Any:
+    """Partition value of a data file from its parent ``{col}={val}``
+    directory name: ``long`` (the rotation window id) or ``string``;
+    :data:`NULL_PARTITION_DIR` reads back as None."""
+    raw = path.rsplit("/", 2)[-2].split("=", 1)[1]
+    if raw == NULL_PARTITION_DIR:
+        return None
+    return int(raw) if ptype == "long" else raw
+
+
+def _local_files(
+    path: str, partition_col: str | None, partition_values=None
+) -> list[tuple[str, int]]:
+    """Sorted ``(path, size)`` pairs of a local flat or hive-partitioned
+    dataset (optionally only ``partition_values``); an unstatable file
+    counts as 0 bytes."""
+    if not partition_col:
+        dirs = [path]
+    elif partition_values is None:
+        dirs = [os.path.join(path, f"{partition_col}=*")]
+    else:
+        dirs = [os.path.join(path, _part_dir(partition_col, v)) for v in partition_values]
+    out = []
+    for f in sorted(f for d in dirs for f in glob.glob(os.path.join(d, "*.avro"))):
+        try:
+            out.append((f, os.path.getsize(f)))
+        except OSError:
+            out.append((f, 0))
+    return out
+
+
 def _dataset_files(
     spark: SparkSession,
     path: str,
@@ -1151,7 +1225,7 @@ def _dataset_files(
 ) -> list[tuple[str, int]]:
     """Three-way dataset enumeration: explicit pyarrow filesystem →
     :func:`_pafs_glob`; URI → :func:`_hadoop_glob`; plain local path →
-    ``glob.glob`` (byte-identical to the pre-r15 behavior)."""
+    :func:`_local_files`."""
     if filesystem is not None:
         return _pafs_glob(filesystem, path, partition_col, partition_values)
     if _split_scheme(path)[0] is not None:
@@ -1160,7 +1234,7 @@ def _dataset_files(
             for v in partition_values:
                 out.extend(
                     _hadoop_glob(
-                        spark, f"{path}/{partition_col}={v}/*.avro"
+                        spark, f"{path}/{_part_dir(partition_col, v)}/*.avro"
                     )
                 )
             return sorted(out)
@@ -1170,22 +1244,7 @@ def _dataset_files(
             else f"{path}/*.avro"
         )
         return _hadoop_glob(spark, pattern)
-    if partition_col and partition_values is not None:
-        files = sorted(
-            f
-            for v in partition_values
-            for f in glob.glob(
-                os.path.join(path, f"{partition_col}={v}", "*.avro")
-            )
-        )
-    else:
-        pattern = (
-            os.path.join(path, f"{partition_col}=*", "*.avro")
-            if partition_col
-            else os.path.join(path, "*.avro")
-        )
-        files = sorted(glob.glob(pattern))
-    return [(f, os.path.getsize(f)) for f in files]
+    return _local_files(path, partition_col, partition_values)
 
 
 def _read_meta(fh: BinaryIO) -> tuple[dict, bytes]:
@@ -1321,6 +1380,9 @@ def _iter_ocf_blocks_split(
         meta, sync = _read_meta(fh)
         schema = json.loads(meta["avro.schema"])
         codec = meta.get("avro.codec", b"null").decode()
+        # schema-specialized in-memory decoder (bit-identical values +
+        # identical corruption errors — _compile_decoder), once per file
+        dec = _decoder_for(schema)
         header_sync_pos = fh.tell() - 16
         if start <= header_sync_pos:
             sync_pos: int | None = header_sync_pos
@@ -1383,9 +1445,6 @@ def _iter_ocf_blocks_split(
             )
             try:
                 _charge_items(n, "block record")
-                # schema-specialized in-memory decoder (bit-identical
-                # values + identical corruption errors — _compile_decoder)
-                dec = _decoder_for(schema)
                 pos = 0
                 block = []
                 for _ in range(n):
@@ -1539,6 +1598,93 @@ def avro_to_spark_schema(schema: dict) -> T.StructType:
 # distributed write / read (mapInArrow — no shuffle, no pandas mangling)
 
 
+def _write_ocf_files(
+    batches: Iterable[Any],
+    root: str,
+    partition_col: str | None,
+    avro_schema: dict,
+    codec: str,
+    name: str,
+    filesystem=None,
+) -> list[tuple[Any, str, int]]:
+    """Task-side OCF writer shared by :func:`write_ocf_dataset` and the
+    ``avro_ocf`` DataSource: Arrow ``batches`` → one file ``name`` per
+    partition value (:func:`_part_dir`), one OCF block per batch and
+    value. Each file is written to a ``.tmp-{taskAttemptId}`` name and
+    moved onto ``name`` at the end, so a failed attempt leaves only a
+    tmp no reader lists and a duplicate attempt cannot interleave into
+    the winner's file. Returns ``(partition value, path, n_records)``."""
+    from pyspark import TaskContext
+
+    attempt = TaskContext.get().taskAttemptId()
+    writers: dict[Any, tuple[OCFWriter, str, str]] = {}
+    with contextlib.ExitStack() as open_files:
+        for batch in batches:
+            by_key: dict[Any, list[dict]] = {}
+            for row in batch.to_pylist():
+                key = row.pop(partition_col) if partition_col else None
+                by_key.setdefault(key, []).append(row)
+            for key, rows in by_key.items():
+                ent = writers.get(key)
+                if ent is None:
+                    d = (
+                        os.path.join(root, _part_dir(partition_col, key))
+                        if partition_col
+                        else root
+                    )
+                    _fs_makedirs(d, filesystem)
+                    fpath = os.path.join(d, name)
+                    tmp = f"{fpath}.tmp-{attempt}"
+                    fh = open_files.enter_context(_fs_create(tmp, filesystem))
+                    ent = writers[key] = (
+                        OCFWriter(fh, avro_schema, codec), fpath, tmp
+                    )
+                ent[0].append(rows)
+    out = []
+    for key, (w, fpath, tmp) in writers.items():
+        _fs_move(tmp, fpath, filesystem)
+        out.append((key, fpath, w.n_records))
+    return out
+
+
+# Rows buffered per Arrow conversion: ``Table.from_pylist`` pays a
+# schema-driven setup per call, which dominates when a read task sees
+# hundreds of ~1-row rotated files; a big block still flushes at once.
+_FLUSH_ROWS = 1000
+
+
+def _read_ocf_batches(
+    items: Iterable[tuple[str, Any, int, int]],
+    arrow_schema: Any,
+    partition_col: str | None = None,
+    reader_schema: Any = None,
+    filesystem=None,
+) -> Iterator[Any]:
+    """Task-side OCF reader shared by :func:`read_ocf_dataset` and the
+    ``avro_ocf`` DataSource: decode ``(path, partition value, start,
+    end)`` byte-range splits (``end == -1`` reads to EOF) into Arrow
+    batches of ``arrow_schema``, coalescing blocks up to
+    :data:`_FLUSH_ROWS` rows; a ``reader_schema`` resolves every file
+    against it."""
+    import pyarrow as pa
+
+    buf: list[dict] = []
+    for path, part_value, start, end in items:
+        for _, block in iter_ocf_blocks_split(
+            path, start, end if end >= 0 else float("inf"), reader_schema,
+            filesystem,
+        ):
+            if partition_col:
+                for r in block:
+                    r[partition_col] = part_value
+            buf.extend(block)
+            if len(buf) >= _FLUSH_ROWS:
+                yield from pa.Table.from_pylist(buf, schema=arrow_schema).to_batches()
+                buf = []
+    if buf:
+        yield from pa.Table.from_pylist(buf, schema=arrow_schema).to_batches()
+
+
 def write_ocf_dataset(
     df: DataFrame,
     path: str,
@@ -1550,13 +1696,12 @@ def write_ocf_dataset(
     """Write ``df`` as .avro container files, one per (task, partition
     value) — the same layout contract as ``DataFrameWriter.partitionBy``
     (``{partition_col}={value}/part-{task}{suffix}.avro``, partition column
-    dropped from the records). Returns the collected manifest
+    dropped from the records, a null value under
+    :data:`NULL_PARTITION_DIR`). Returns the collected manifest
     [{partition, path, n_records}]; the collect is metadata-only.
 
-    Each attempt writes to a private ``.tmp-{taskAttemptId}`` file and
-    atomically ``os.replace``s it onto the final name when done, so a
-    speculative or zombie duplicate attempt can never interleave bytes
-    into the winner's file — last complete attempt wins. The same
+    Each task runs :func:`_write_ocf_files`: tmp file, then a move onto
+    the final name, so the last complete attempt wins. The same
     replace semantics make re-runs idempotent: the rotated sink replays
     a failed micro-batch by rewriting the SAME (task, suffix) names,
     which is exactly the at-least-once → idempotent-commit contract
@@ -1580,68 +1725,23 @@ def write_ocf_dataset(
     manifest_schema = pa.schema(
         [("partition", pa.string()), ("path", pa.string()), ("n_records", pa.int64())]
     )
-    is_uri = _split_scheme(path)[0] is not None
 
     def task(batches):
         from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        attempt = ctx.taskAttemptId()
-        writers: dict[Any, tuple[Any, OCFWriter, str, str]] = {}
-        for batch in batches:
-            by_part: dict[Any, list[dict]] = {}
-            for row in batch.to_pylist():
-                key = row.pop(partition_col) if partition_col else None
-                by_part.setdefault(key, []).append(row)
-            for key, rows in by_part.items():
-                if key not in writers:
-                    d = (
-                        os.path.join(path, f"{partition_col}={key}")
-                        if partition_col
-                        else path
-                    )
-                    fpath = os.path.join(d, f"part-{pid:05d}{suffix}.avro")
-                    tmp = f"{fpath}.tmp-{attempt}"
-                    if filesystem is not None:
-                        filesystem.create_dir(d, recursive=True)
-                        fh = filesystem.open_output_stream(
-                            tmp, compression=None
-                        )
-                    elif is_uri:
-                        fs, d_int = _pafs_resolve(d)
-                        fs.create_dir(d_int, recursive=True)
-                        fh = fs.open_output_stream(
-                            _pafs_resolve(tmp)[1], compression=None
-                        )
-                    else:
-                        os.makedirs(d, exist_ok=True)
-                        fh = open(tmp, "wb")
-                    writers[key] = (fh, OCFWriter(fh, avro_schema, codec), fpath, tmp)
-                writers[key][1].append(rows)
-        rows = []
-        for key, (fh, w, fpath, tmp) in writers.items():
-            fh.close()
-            if filesystem is not None:
-                filesystem.move(tmp, fpath)
-            elif is_uri:
-                fs, tmp_int = _pafs_resolve(tmp)
-                fs.move(tmp_int, _pafs_resolve(fpath)[1])
-            else:
-                os.replace(tmp, fpath)  # atomic: zombies can't interleave
-            rows.append(
-                {"partition": str(key), "path": fpath, "n_records": w.n_records}
-            )
+        pid = TaskContext.get().partitionId()
+        written = _write_ocf_files(
+            batches, path, partition_col, avro_schema, codec,
+            f"part-{pid:05d}{suffix}.avro", filesystem,
+        )
+        rows = [
+            {"partition": None if k is None else str(k), "path": f, "n_records": n}
+            for k, f, n in written
+        ]
         if rows:  # empty input partitions contribute no manifest batch
             yield pa.Table.from_pylist(rows, schema=manifest_schema).to_batches()[0]
 
-    if filesystem is not None:
-        filesystem.create_dir(path, recursive=True)
-    elif is_uri:
-        fs, internal = _pafs_resolve(path)
-        fs.create_dir(internal, recursive=True)
-    else:
-        os.makedirs(path, exist_ok=True)
+    _fs_makedirs(path, filesystem)
     manifest = df.mapInArrow(task, "partition string, path string, n_records long")
     return [r.asDict() for r in manifest.collect()]
 
@@ -1655,16 +1755,17 @@ def read_ocf_dataset(
 ) -> DataFrame:
     """Parallel re-read of a :func:`write_ocf_dataset` layout. The Spark
     schema comes from the first file's own header (self-describing); the
-    partition column is recovered from directory names as LONG (the
-    rotation window id — the only partition key the sinks use).
+    partition column is recovered from directory names as a nullable
+    LONG (the rotation window id — the only partition key the sinks
+    use; :data:`NULL_PARTITION_DIR` reads back as null).
     ``partition_values`` restricts the read to those partition ids —
     only the matching directories are listed, so a pruned range read
     (operators/rotation.py:read_rotated_range) never lists the files
     of windows outside the probe.
 
-    Filesystem-agnostic (VERDICT r14 #1): a URI ``path`` (``hdfs://``,
-    ``s3a://``, ...) is enumerated through the Hadoop FileSystem handle
-    (cluster credentials) and opened on executors through ``pyarrow.fs``
+    Filesystem-agnostic: a URI ``path`` (``hdfs://``, ``s3a://``, ...)
+    is enumerated through the Hadoop FileSystem handle (cluster
+    credentials) and opened on executors through ``pyarrow.fs``
     resolved per scheme; an explicit picklable ``filesystem``
     (``pyarrow.fs.FileSystem``) rides the task closure and both lists
     and opens — the injected-store branch for custom endpoints."""
@@ -1675,31 +1776,23 @@ def read_ocf_dataset(
     sized = _dataset_files(
         spark, path, partition_col, partition_values, filesystem
     )
-    files = [f for f, _sz in sized]
-    if not files:
+    if not sized:
         raise FileNotFoundError(f"no .avro files under {path}")
     total_bytes = sum(sz for _f, sz in sized)
-    data_schema = avro_to_spark_schema(read_ocf_header(files[0], filesystem))
-    out_schema = T.StructType(list(data_schema.fields))
-    rows = []
-    for f in files:
-        pv = (
-            int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-            if partition_col
-            else None
-        )
-        rows.append((f, pv))
+    out_schema = avro_to_spark_schema(read_ocf_header(sized[0][0], filesystem))
     if partition_col:
-        out_schema = out_schema.add(partition_col, T.LongType(), False)
+        out_schema = out_schema.add(partition_col, T.LongType(), True)
+    rows = [
+        (f, _part_value(f) if partition_col else None) for f, _sz in sized
+    ]
     arrow_schema = to_arrow_schema(out_schema)
-    # r16: the file list is a driver-local list — build it as ONE slice
+    # The file list is driver-local: build it as ONE slice
     # (session.tiny_df) before the spreading repartition, or
     # createDataFrame slices it into defaultParallelism raw Python
-    # tasks that each pay the worker handshake (measured ~10 of the
-    # 18.8 CPU-s of a 601-file pruned read). The decode-task count is
-    # BYTES-proportional (Spark's own scan-sizing rule, guide §6):
-    # a pruned read of hundreds of tiny rotation windows is one task
-    # instead of 32 near-empty Python workers, while a multi-GB layout
+    # tasks that each pay the worker handshake. The decode-task count
+    # is BYTES-proportional (Spark's own scan-sizing rule): a pruned
+    # read of hundreds of tiny rotation windows is one task instead of
+    # dozens of near-empty Python workers, while a multi-GB layout
     # still fans out to maxPartitionBytes-sized chunks.
     from ..session import tiny_df
 
@@ -1709,48 +1802,25 @@ def read_ocf_dataset(
         )
         # Spark's own byte-string parser: '128m'/'1g' suffixes must NOT
         # degrade to 128/1 bytes (a digit-strip would fan a 601-file
-        # read out to 601 one-file Python tasks — r16 review finding)
+        # read out to 601 one-file Python tasks)
         max_pb = int(
             spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
             .byteStringAsBytes(raw)
         )
     except Exception:
         max_pb = 128 << 20
-    n_parts = max(1, min(len(files), -(-total_bytes // max(1, max_pb))))
+    n_parts = max(1, min(len(rows), -(-total_bytes // max(1, max_pb))))
     fdf = tiny_df(spark, rows, "path string, _pv long").repartition(n_parts)
 
     def task(batches):
-        import pyarrow as pa
-
-        # r16 (guide §4/§6): COALESCE small OCF blocks across files
-        # before building Arrow tables. A rotated sink yields hundreds
-        # of ~1-row files per task, and Table.from_pylist pays a
-        # schema-driven setup per call — per-block conversion cost 18.5
-        # CPU-s to read 601 tiny windows (measured), the conversion,
-        # not the decode. Accumulating up to _FLUSH_ROWS rows amortizes
-        # it while keeping task memory bounded by ~one real writer
-        # block (big blocks still flush immediately).
-        _FLUSH_ROWS = 1000
-        buf: list = []
-
-        def flush():
-            t = pa.Table.from_pylist(buf, schema=arrow_schema)
-            buf.clear()
-            return t.to_batches()
-
-        for batch in batches:
-            for row in batch.to_pylist():
-                for _, block in iter_ocf_blocks(
-                    row["path"], filesystem=filesystem
-                ):
-                    if partition_col:
-                        for r in block:
-                            r[partition_col] = row["_pv"]
-                    buf.extend(block)
-                    if len(buf) >= _FLUSH_ROWS:
-                        yield from flush()
-        if buf:
-            yield from flush()
+        items = (
+            (r["path"], r["_pv"], 0, -1)
+            for batch in batches
+            for r in batch.to_pylist()
+        )
+        return _read_ocf_batches(
+            items, arrow_schema, partition_col, filesystem=filesystem
+        )
 
     return fdf.mapInArrow(task, out_schema)
 

@@ -281,6 +281,8 @@ def test_compiled_codec_map_and_logicals_bit_match():
     import datetime as dt
     import io
 
+    import numpy as np
+
     from blockchaintoavro_spark.sources.avro_io import (
         _compile_decoder,
         _compile_encoder,
@@ -296,6 +298,7 @@ def test_compiled_codec_map_and_logicals_bit_match():
             {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
             {"name": "d", "type": {"type": "int", "logicalType": "date"}},
             {"name": "f", "type": ["null", "float"]},
+            {"name": "a", "type": ["null", {"type": "array", "items": "long"}]},
         ],
     }
     rows = [
@@ -303,11 +306,14 @@ def test_compiled_codec_map_and_logicals_bit_match():
          "d": dt.date(1969, 12, 31), "f": 1.5},
         {"m": {}, "ts": 0, "d": 0, "f": None},
         {"m": None, "ts": -1, "d": 12345, "f": -0.0},
+        # array values _encode accepts: a tuple and a numpy array
+        {"m": None, "ts": 1, "d": 1, "f": None, "a": (3, -4, 2**40)},
+        {"m": None, "ts": 2, "d": 2, "f": None, "a": np.array([5, 0, -6], dtype=np.int64)},
         {},  # empty dict → every field encodes as None/0-path like _encode
     ]
     # the empty dict hits _encode's `if v else None` falsy branch for the
     # non-nullable ts/d fields too — both sides must fail identically
-    ok_rows = rows[:3]
+    ok_rows = rows[:5]
     ref = io.BytesIO()
     for r in ok_rows:
         _encode(ref, sch, r)
@@ -563,6 +569,85 @@ def test_datasource_null_partition_value_roundtrips(spark, tmpdir):
     )
     got = {r["doc_id"]: r["bucket"] for r in back.collect()}
     assert got == {1: 10, 2: None, 3: 10}
+
+
+def test_rotated_null_timestamp_row_roundtrips(tmp_path, spark):
+    """A row with no event time lands in the hive default partition:
+    read_rotated returns it with a null window id, and a time-range
+    read never includes it (a null timestamp satisfies no bound)."""
+    from blockchaintoavro_spark.operators.rotation import (
+        read_rotated,
+        read_rotated_range,
+        write_rotated,
+    )
+
+    out = str(tmp_path / "rot")
+    df = spark.createDataFrame(
+        [(1, 600_000), (2, None), (3, 1_300_000)],
+        "ingest_id long, timestamp long",
+    )
+    write_rotated(df, out, rotation_seconds=600)
+    back = read_rotated(spark, out)
+    assert {r["ingest_id"]: r["window_id"] for r in back.collect()} == {
+        1: 1,
+        2: None,
+        3: 2,
+    }
+    rng = read_rotated_range(spark, out, 0, 2_000_000, 600)
+    assert sorted(r["ingest_id"] for r in rng.collect()) == [1, 3]
+
+
+@pytest.mark.parametrize("writer", ["write_ocf_dataset", "datasource"])
+def test_ocf_readers_agree(spark, tmp_path, writer):
+    """read_ocf_dataset and spark.read.format("avro_ocf") return the same
+    schema and rows over one layout holding a null partition and
+    multi-block files that the DataSource reads as several splits — for
+    files written by either writer."""
+    from blockchaintoavro_spark.sources import avro_datasource as ads
+    from blockchaintoavro_spark.sources.avro_io import (
+        read_ocf_dataset,
+        write_ocf_dataset,
+    )
+
+    ads.register(spark)
+    d = str(tmp_path / "ds")
+    df = spark.createDataFrame(
+        [
+            (i, f"row-{i}-" * 4, None if i % 5 == 0 else i % 2)
+            for i in range(400)
+        ],
+        "id long, text string, bucket long",
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "50")  # several Arrow batches → several blocks
+    try:
+        if writer == "write_ocf_dataset":
+            write_ocf_dataset(df, d, partition_col="bucket")
+        else:
+            df.write.format("avro_ocf").option("partition_col", "bucket").mode(
+                "overwrite"
+            ).save(d)
+    finally:
+        spark.conf.set(key, prev)
+    assert os.path.isdir(os.path.join(d, "bucket=__HIVE_DEFAULT_PARTITION__"))
+
+    opts = {"path": d, "partition_col": "bucket", "split_size": "256"}
+    schema = ads.AvroOCFDataSource(opts).schema()
+    parts = ads.AvroOCFReader(schema, opts).partitions()
+    paths = [p.path for p in parts if isinstance(p, ads._FilePartition)]
+    assert len(paths) > len(set(paths)), "a file must be read as splits"
+
+    via_fn = read_ocf_dataset(spark, d, partition_col="bucket")
+    via_ds = (
+        spark.read.format("avro_ocf")
+        .option("partition_col", "bucket")
+        .option("split_size", "256")
+        .load(d)
+    )
+    assert via_fn.schema == via_ds.schema
+    assert _as_dicts(via_fn, "id") == _as_dicts(via_ds, "id")
+    assert _as_dicts(via_fn, "id") == _as_dicts(df, "id")
 
 
 # ---------------------------------------------------------------------------
