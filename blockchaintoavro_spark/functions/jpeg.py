@@ -125,22 +125,30 @@ _B = [
 class _HuffTable(dict):
     """Canonical Huffman decode dict plus its flat fast-path LUT (the
     dict walk remains for the progressive decoder's bit-level control
-    flow; the baseline hot loop indexes ``fast_lut``)."""
+    flow; the baseline hot loop indexes ``fast_lut``). Read-only once
+    built: the lru_caches share one instance across every decode."""
 
     __slots__ = ("fast_lut",)
+
+    def _read_only(self, *args, **kwargs):
+        raise TypeError("cached Huffman table is read-only")
+
+    __setitem__ = __delitem__ = __ior__ = _read_only
+    clear = pop = popitem = setdefault = update = _read_only
 
 
 @_functools.lru_cache(maxsize=64)
 def _build_decode_table_cached(counts: tuple, symbols: tuple) -> dict:
-    table = _HuffTable()
+    entries = {}
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
+            entries[(length, code)] = symbols[k]
             code += 1
             k += 1
         code <<= 1
+    table = _HuffTable(entries)
     table.fast_lut = _build_fast_lut_cached(counts, symbols)
     return table
 
@@ -154,7 +162,7 @@ def _build_decode_table(counts: list[int], symbols: list[int]) -> dict:
 
 
 @_functools.lru_cache(maxsize=64)
-def _build_fast_lut_cached(counts: tuple, symbols: tuple) -> list:
+def _build_fast_lut_cached(counts: tuple, symbols: tuple) -> tuple:
     """Flat 2^16-entry Huffman lookup: ``lut[next16bits]`` →
     ``(symbol << 5) | code_length`` (0 = invalid). One list index
     replaces the bit-at-a-time walk of ``decode_huffman`` — the walk
@@ -179,7 +187,7 @@ def _build_fast_lut_cached(counts: tuple, symbols: tuple) -> list:
             code += 1
             k += 1
         code <<= 1
-    return lut
+    return tuple(lut)
 
 
 class _FastBits:
@@ -524,7 +532,7 @@ def _parse_dqt_cached(seg: bytes) -> tuple:
     table), ...). Memoized on the raw segment bytes — bulk corpora
     repeat identical quant segments file after file, and the per-file
     re-parse was measurable in the tiny-image decode profile. The
-    cached tables are treated read-only downstream."""
+    cached tables are tuples, so they cannot be mutated downstream."""
     out = []
     i = 0
     while i < len(seg):
@@ -539,7 +547,7 @@ def _parse_dqt_cached(seg: bytes) -> tuple:
         tbl = [0] * 64
         for z in range(64):
             tbl[ZIGZAG[z]] = vals[z]
-        out.append((tq, tbl))
+        out.append((tq, tuple(tbl)))
     return tuple(out)
 
 
@@ -641,7 +649,7 @@ def decode_jpeg(data: bytes) -> dict:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (bad SOI)")
     pos = 2
-    qtables: dict[int, list[int]] = {}
+    qtables: dict[int, tuple[int, ...]] = {}
     htables: dict[tuple[int, int], dict] = {}
     restart_interval = 0
     frame = None  # (w, h, components)
@@ -934,7 +942,7 @@ def _decode_progressive(data: bytes) -> dict:
     scans (DC/AC, first/refinement, per T.81 G.2), then dequantize +
     IDCT once at EOI. Same output contract as :func:`decode_jpeg`."""
     pos = 2
-    qtables: dict[int, list[int]] = {}
+    qtables: dict[int, tuple[int, ...]] = {}
     htables: dict[tuple[int, int], dict] = {}
     restart_interval = 0
     frame = None

@@ -8,9 +8,10 @@ for LLM-data pipelines, each designed to avoid O(n²) work at 100 TB.
   posting list (a stopword appearing in every doc would otherwise create a
   quadratic bucket).
 - minhash_signature / minhash_candidate_pairs: MinHash + LSH banding —
-  signatures are fixed-size (k hashes) regardless of doc length; candidates
-  come from band-bucket equi-joins (linear-ish), then optional exact-Jaccard
-  rerank. Hash = xxhash64 with per-permutation salts (deterministic, seeded).
+  signatures are fixed-size (k hashes) regardless of doc length, taken as
+  per-row minima in one hash aggregate; candidates come from band-bucket
+  equi-joins (linear-ish), then optional exact-Jaccard rerank. Hash =
+  xxhash64 of each token, then k seeded affine permutations mod 2^31-1.
 - simhash64: 64-bit SimHash over token hashes; near-dups differ in few bits.
 """
 
@@ -112,6 +113,56 @@ def exact_jaccard_pairs(
     )
 
 
+def _q(name: str) -> str:
+    """Backtick-quote a column name for a SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _minhash_sig_sql(
+    df: DataFrame, id_col: str, text_col: str, n_hashes: int, seed: int
+) -> DataFrame:
+    """``(id_col, minhash)`` as one hash aggregate: one row per
+    (input row, distinct token), then ``min`` of each affine permutation
+    per input row. Each projection is one SQL string, parsed JVM-side
+    once, so building the plan is a constant number of Py4J calls
+    instead of one per expression node; the minima run in a
+    whole-stage-codegen aggregate instead of ``n_hashes`` interpreted
+    lambda HOFs.
+
+    Grouping is by a per-row key (``monotonically_increasing_id``), not
+    by ``id_col``: rows sharing an id each keep their own signature. A
+    null text explodes to one null token whose hash is forced to NULL
+    (``xxhash64(NULL)`` is the seed, not NULL), so its signature is
+    ``n_hashes`` nulls, as ``array_min`` over a null array gives."""
+    import random
+
+    rng = random.Random(seed)
+    coeffs = [
+        (rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(n_hashes)
+    ]
+    mins = ", ".join(f"min((_h * {a} + {b}) % {_P})" for a, b in coeffs)
+    # the row key gets its own projection: next to the generator, Spark
+    # would evaluate it once per exploded row, not once per input row.
+    # The token split is functions/text.tokens (the oracles' twin).
+    return (
+        df.selectExpr(
+            _q(id_col), _q(text_col), "monotonically_increasing_id() AS _row"
+        )
+        .selectExpr(
+            _q(id_col),
+            "_row",
+            f"explode_outer(array_distinct(split(lower({_q(text_col)}), ' '))) AS _tk",
+        )
+        .selectExpr(
+            _q(id_col),
+            "_row",
+            f"if(_tk IS NULL, NULL, abs(xxhash64(_tk)) % {_P}) AS _h",
+        )
+        .groupBy(id_col, "_row")
+        .agg(F.expr(f"array({mins}) AS minhash"))
+    )
+
+
 def minhash_signature(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -119,38 +170,15 @@ def minhash_signature(
     n_hashes: int = 32,
     seed: int = 42,
 ) -> DataFrame:
-    """Fixed-size MinHash signature per document (array<long>, length
-    ``n_hashes``): sig[i] = min over tokens of universal-hash_i(xxhash64(tk)).
+    """Fixed-size MinHash signature per input row (array<long>, length
+    ``n_hashes``): sig[i] = min over the row's distinct tokens of
+    (a_i·h + b_i) mod p, with h = |xxhash64(token)| mod p.
 
-    Pure JVM expressions: token base hash once, then affine permutations
-    (a_i·h + b_i mod p) folded with array_min — no Python, no shuffle.
-    The base hash array is materialized in its own projection so the 32
-    permutation expressions share ONE tokenization+hash evaluation
-    (codegen subexpression elimination doesn't reach across big
-    expression trees reliably — without the barrier each sig element
-    re-tokenizes the document).
-    """
-    import random
-
-    rng = random.Random(seed)
-    coeffs = [
-        (rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(n_hashes)
-    ]
-    toks = F.array_distinct(tokens(F.col(text_col)))
-    base = F.transform(toks, lambda tk: F.abs(F.xxhash64(tk)) % F.lit(_P))
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("_base"),
-                    lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_P),
-                )
-            )
-            for (a, b) in coeffs
-        ]
-    )
-    return df.select(F.col(id_col), base.alias("_base")).select(
-        F.col(id_col), sig.alias("minhash")
+    Pure JVM: the token hashes are exploded and the ``n_hashes`` minima
+    are taken by one hash aggregate (see :func:`_minhash_sig_sql`) — no
+    Python. A null text gives ``n_hashes`` nulls."""
+    return _minhash_sig_sql(df, id_col, text_col, n_hashes, seed).select(
+        id_col, "minhash"
     )
 
 
@@ -168,26 +196,21 @@ def minhash_bands(
     join key of :func:`minhash_candidate_pairs` and the standing state
     an incremental index persists between ingests
     (operators/neardup_index.py): band rows are the entire dedup state,
-    ~``n_bands × 8`` bytes per document."""
+    ~``n_bands × 8`` bytes per document.
+
+    Band b's hash is ``xxhash64(sig[b·r], …, sig[(b+1)·r - 1], b)``:
+    only bucket-grouping quality is needed (banding is probabilistic by
+    construction) and it stays in whole-stage codegen, unlike a SHA
+    round per band. The projection is one SQL string."""
     r = n_hashes // n_bands
-    sig = minhash_signature(df, id_col, text_col, n_hashes, seed)
-    return sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    # xxhash64 over the band's signature slice: only
-                    # bucket-grouping quality is needed (banding is
-                    # probabilistic by construction) and it stays in
-                    # whole-stage codegen, unlike a SHA round per band
-                    F.xxhash64(
-                        *[F.col("minhash")[i] for i in range(b * r, (b + 1) * r)],
-                        F.lit(b),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_id", "band_hash"),
+    hashes = ", ".join(
+        "xxhash64("
+        + ", ".join(f"minhash[{i}]" for i in range(b * r, (b + 1) * r))
+        + f", {b})"
+        for b in range(n_bands)
+    )
+    return _minhash_sig_sql(df, id_col, text_col, n_hashes, seed).selectExpr(
+        _q(id_col), f"posexplode(array({hashes})) AS (band_id, band_hash)"
     )
 
 
@@ -207,25 +230,18 @@ def minhash_candidate_pairs(
     Returns distinct (d1 < d2) candidate pairs. Scale: equi-join on
     (band_id, band_hash) buckets — linear in collisions, never O(n²).
 
-    r16: the banded-signature table is consumed by BOTH self-join sides;
-    in the broadcast regime the build side re-runs the whole
-    tokenize+32-permutation pipeline (plan-verified: 4 source scans with
-    no barrier → 3 with it). The AQE ``REBALANCE`` barrier materializes
-    bands once — fixed-width (id, band_id, band_hash) rows, ~n_bands·24
-    bytes per doc, far smaller than one re-tokenization — so both sides
-    read shuffle files (guide §2.4/§8; interleaved A/B at the
-    x_minhash_neardup shape: 1.90 → 1.71 CPU-s, wall 1.06 → 0.96). In
-    the sort-merge regime ReuseExchange already shared the join-side
-    exchange, so the barrier costs nothing extra there.
+    The band table feeds BOTH self-join sides. Its signature aggregate
+    ends in a shuffle Exchange, which is where the tokenize+hash work is
+    materialized: both sides (the broadcast build side too) read that
+    exchange's shuffle files through exchange reuse, so the corpus is
+    tokenized once per call without a REBALANCE barrier of its own.
     """
-    bands = minhash_bands(df, id_col, text_col, n_hashes, n_bands, seed).hint(
-        "rebalance"
-    )
-    a = bands.select(F.col(id_col).alias("d1"), "band_id", "band_hash")
-    b = bands.select(F.col(id_col).alias("d2"), "band_id", "band_hash")
+    bands = minhash_bands(df, id_col, text_col, n_hashes, n_bands, seed)
+    a = bands.selectExpr(f"{_q(id_col)} AS d1", "band_id", "band_hash")
+    b = bands.selectExpr(f"{_q(id_col)} AS d2", "band_id", "band_hash")
     return (
         a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("d1") < F.col("d2"))
+        .where("d1 < d2")
         .select("d1", "d2")
         .distinct()
     )

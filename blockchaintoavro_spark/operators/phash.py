@@ -191,9 +191,9 @@ def phash_neardup_pairs(
     # pipeline — measured 36.2 CPU-s without the barrier, double the
     # single-pass cost). The AQE REBALANCE barrier materializes the
     # fixed-width (id, code, band_id, band_val) rows once so both sides
-    # read shuffle files — the minhash_candidate_pairs decision
-    # (guide §2.4/§8); in the sort-merge regime ReuseExchange already
-    # shared the exchange, so the barrier costs nothing there.
+    # read shuffle files (guide §2.4/§8); in the sort-merge regime
+    # ReuseExchange already shared the exchange, so the barrier costs
+    # nothing there.
     bands = hamming_bands(codes, id_col, code_col, n_bands).hint("rebalance")
     a = bands.select(
         F.col(id_col).alias("d1"), F.col(code_col).alias("_c1"),

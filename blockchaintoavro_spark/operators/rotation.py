@@ -22,6 +22,8 @@ retries (×3 record, ×5 upload — Main.java:189-202).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -142,6 +144,11 @@ def rotated_window_span(
     return wlo, whi
 
 
+# one entry of a FileStatus array's toString: the path runs up to the
+# first "; isDirectory=" (non-greedy, so a ';' inside a name is kept)
+_STATUS_RE = re.compile(r"\{path=(.*?); isDirectory=(true|false)")
+
+
 def prune_rotated(
     spark: SparkSession,
     path: str,
@@ -158,7 +165,12 @@ def prune_rotated(
     kept windows' files are ever listed or opened
     (:func:`read_rotated_range`). The listing runs through the
     scheme-agnostic Hadoop FileSystem handle, or through an explicit
-    pyarrow ``filesystem`` when one is injected."""
+    pyarrow ``filesystem`` when one is injected.
+
+    The Hadoop listing crosses Py4J as ONE string (the ``FileStatus``
+    array's ``toString``, whose entries read ``{path=…; isDirectory=…``)
+    so its cost is a constant number of round trips, not three per
+    window (``getPath``/``getName``/``isDirectory``)."""
     if filesystem is not None:
         from pyarrow import fs as pafs
 
@@ -171,10 +183,13 @@ def prune_rotated(
         jvm = spark._jvm
         jp = jvm.org.apache.hadoop.fs.Path(path)
         fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+        listing = jvm.org.apache.commons.lang3.ArrayUtils.toString(
+            fs.listStatus(jp)
+        )
         names = [
-            st.getPath().getName()
-            for st in fs.listStatus(jp)
-            if st.isDirectory()
+            m.group(1).rsplit("/", 1)[-1]
+            for m in _STATUS_RE.finditer(listing)
+            if m.group(2) == "true"
         ]
     ids = []
     for name in names:

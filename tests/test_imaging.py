@@ -1298,3 +1298,70 @@ def test_resize_vectorized_bit_match(sw, sh, dw, dh, ch, rnd):
     assert resize_nearest(px, sw, sh, dw, dh, ch) == _resize_nearest_ref(
         px, sw, sh, dw, dh, ch
     )
+
+
+def test_cached_decode_tables_and_grids_are_read_only():
+    """The lru-cached quant/Huffman tables and pixel-synthesis grids are
+    shared by every later call, so an in-place write must raise instead
+    of silently corrupting later decodes."""
+    import numpy as np
+
+    from blockchaintoavro_spark.functions.jpeg import (
+        _parse_dht_cached,
+        _parse_dqt_cached,
+    )
+    from blockchaintoavro_spark.operators.multimodal import (
+        _jpeg_base_grid,
+        _ramp7,
+    )
+
+    qt = dict(_parse_dqt_cached(bytes([0]) + bytes(range(1, 65))))[0]
+    assert isinstance(qt, tuple) and qt[0] == 1
+    with pytest.raises(TypeError):
+        qt[0] = 2
+    counts = bytes([0, 1] + [0] * 14)
+    ht = dict(_parse_dht_cached(bytes([0x10]) + counts + bytes([5])))[(1, 0)]
+    assert ht[(2, 0)] == 5
+    with pytest.raises(TypeError):
+        ht[(2, 1)] = 6
+    with pytest.raises(TypeError):
+        ht.update({(2, 1): 6})
+    with pytest.raises(TypeError):
+        ht.fast_lut[0] = 1
+    for arr in (_ramp7(12), _jpeg_base_grid(8, 16, 3)):
+        with pytest.raises(ValueError, match="read-only"):
+            arr[0] = 1
+        with pytest.raises(ValueError, match="read-only"):
+            np.add(arr, 1, out=arr)
+
+
+def test_roundtrip_synthesizers_exact_for_huge_ids(spark):
+    """Ids above ~2.9e17 overflow int64 once multiplied by the pixel
+    formula's id factor; the id term is reduced mod 256 first, so the
+    synthesized pixels still equal the exact integer formula."""
+    from blockchaintoavro_spark.operators.multimodal import (
+        image_roundtrip_features,
+        jpeg_roundtrip_features,
+    )
+
+    ids = [3 * 10**17, 3 * 10**17 + 1, 2**63 - 2, 2**63 - 1]
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+
+    got = {r.doc_id: r for r in image_roundtrip_features(df).collect()}
+    for i in ids:
+        w, h, ch = 4 + i % 13, 3 + i % 7, 1 if i % 2 == 0 else 3
+        px = bytes((i * 31 + 7 * k) % 256 for k in range(w * h * ch))
+        assert (got[i].width, got[i].height) == (w, h)
+        assert got[i].checksum == pixel_checksum(px), i
+
+    got = {r.doc_id: r for r in jpeg_roundtrip_features(df).collect()}
+    for i in ids:
+        w, h, ch = 8 * (1 + i % 3), 8 * (1 + i % 2), 1 if i % 2 == 0 else 3
+        px = bytes(
+            (i * 17 + (x // 8) * 29 + (y // 8) * 41 + c * 53) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(ch)
+        )
+        assert (got[i].width, got[i].height, got[i].channels) == (w, h, ch)
+        assert got[i].checksum == pixel_checksum(px), i

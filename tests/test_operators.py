@@ -5,10 +5,15 @@ multimodal plumbing determinism."""
 
 from __future__ import annotations
 
+import os
+import random
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from blockchaintoavro_spark.operators.asof import asof_latest
@@ -19,7 +24,9 @@ from blockchaintoavro_spark.operators.dedup import (
     dedup_clusters,
     exact_dedup,
     exact_jaccard_pairs,
+    minhash_bands,
     minhash_candidate_pairs,
+    minhash_signature,
     simhash64,
 )
 from blockchaintoavro_spark.operators.rotation import (
@@ -116,6 +123,136 @@ def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):
     assert truth, "fixture should contain true near-dup pairs"
     recall = len(truth & cand) / len(truth)
     assert recall >= 0.9, f"minhash recall {recall:.3f} < 0.9"
+
+
+# The lambda-HOF MinHash formulation the aggregate form replaced, kept
+# as the bit-identity reference: the band stores of standing near-dup
+# indexes were built by it, so the aggregate must reproduce it exactly.
+def _ref_minhash_signature(df, n_hashes=32, seed=42):
+    from blockchaintoavro_spark.functions.text import tokens
+    from blockchaintoavro_spark.operators.dedup import _P
+
+    rng = random.Random(seed)
+    coeffs = [
+        (rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(n_hashes)
+    ]
+    toks = F.array_distinct(tokens(F.col("text")))
+    base = F.transform(toks, lambda tk: F.abs(F.xxhash64(tk)) % F.lit(_P))
+    sig = F.array(
+        *[
+            F.array_min(
+                F.transform(
+                    F.col("_base"), lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_P)
+                )
+            )
+            for (a, b) in coeffs
+        ]
+    )
+    return df.select("doc_id", base.alias("_base")).select(
+        "doc_id", sig.alias("minhash")
+    )
+
+
+def _ref_minhash_bands(sig, n_hashes=32, n_bands=16):
+    r = n_hashes // n_bands
+    hashes = [
+        F.xxhash64(*[F.col("minhash")[i] for i in range(b * r, (b + 1) * r)], F.lit(b))
+        for b in range(n_bands)
+    ]
+    return sig.select(
+        "doc_id", F.posexplode(F.array(*hashes)).alias("band_id", "band_hash")
+    )
+
+
+def _multiset(df):
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+_WORDS = st.sampled_from(["a", "b", "Ab", "ÉTÉ", "straße", "x1", "ok", ""])
+_TEXTS = st.one_of(
+    st.none(),
+    st.lists(_WORDS, max_size=6).map(" ".join),
+    st.text(alphabet="aB é\u03a9 ", max_size=10),
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(st.one_of(st.none(), st.integers(0, 3)), _TEXTS), max_size=6
+    )
+)
+@example(
+    rows=[
+        (0, None),
+        (1, ""),
+        (2, "a a b a"),
+        (3, " a b"),
+        (4, "a b "),
+        (5, "a  b"),
+        (6, "ÉTÉ Straße Ωmega"),
+        (None, "a b"),
+        (None, None),
+        (7, "same text"),
+        (7, "same text"),
+        (8, "one text"),
+        (8, "other text"),
+    ]
+)
+def test_minhash_aggregate_matches_hof_reference(spark, rows):
+    """The aggregate MinHash is bit-identical to the HOF formulation, row
+    for row: null/empty text, repeated tokens, odd spacing, case and
+    non-ASCII text, null ids, and duplicate ids with the same or
+    different text (each row keeps its own signature)."""
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    ref = _ref_minhash_signature(df)
+    assert _multiset(minhash_signature(df)) == _multiset(ref)
+    assert _multiset(minhash_bands(df)) == _multiset(_ref_minhash_bands(ref))
+
+
+def test_minhash_candidate_pairs_py4j_budget(spark, sf_dir, py4j_round_trips):
+    """Building the candidate-pairs DataFrame (no action) costs a
+    constant, small number of Py4J round trips: each projection is one
+    SQL string, not one JVM call per expression node (the lambda-HOF
+    build took about 4,500)."""
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    minhash_candidate_pairs(d)  # warm: first-use class lookups
+    py4j_round_trips.reset()
+    minhash_candidate_pairs(d)
+    assert py4j_round_trips.n <= 200, py4j_round_trips.n
+
+
+def test_minhash_candidate_pairs_tokenizes_once(spark, tmpdir):
+    """Both self-join sides (the broadcast build side too) read the
+    signature aggregate's shuffle, so the tokenize+hash stage runs
+    once per call: the input partitions complete exactly one task each
+    within the call's job group."""
+    path = os.path.join(tmpdir, "docs")
+    spark.createDataFrame(
+        [(i, f"w{i % 9} shared words here x{i % 5}") for i in range(60)],
+        "doc_id long, text string",
+    ).repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    n_in = df.rdd.getNumPartitions()
+    sc = spark.sparkContext
+    group = "minhash_tokenizes_once"
+    sc.setJobGroup(group, group)
+    try:
+        assert minhash_candidate_pairs(df).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st_ = sc.statusTracker()
+    scan_tasks = sum(
+        info.numCompletedTasks
+        for j in st_.getJobIdsForGroup(group)
+        for s in st_.getJobInfo(j).stageIds
+        if (info := st_.getStageInfo(s)) is not None and info.numTasks == n_in
+    )
+    assert scan_tasks == n_in, (scan_tasks, n_in)
 
 
 def test_exact_dedup_keeps_one_per_content(spark):
@@ -3903,3 +4040,23 @@ def test_prune_rotated_skips_null_partition_dir(spark, tmpdir):
         spark, tmpdir, int(r["mn"]), int(r["mx"]), 600, "timestamp"
     ).count()
     assert got == 50
+
+
+def test_prune_rotated_listing_is_constant_py4j(spark, tmpdir, py4j_round_trips):
+    """A 1,000-window sink is pruned in a constant number of Py4J round
+    trips (the listing crosses as one string, not three calls per
+    window); a regular FILE named ``window_id=…`` and the NULL
+    partition directory are not windows."""
+    from blockchaintoavro_spark.operators.rotation import prune_rotated
+
+    for w in range(1000):
+        os.makedirs(os.path.join(tmpdir, f"window_id={w}"))
+    os.makedirs(os.path.join(tmpdir, "window_id=__HIVE_DEFAULT_PARTITION__"))
+    open(os.path.join(tmpdir, "window_id=5000"), "w").close()
+    open(os.path.join(tmpdir, "_SUCCESS"), "w").close()
+    prune_rotated(spark, tmpdir)  # warm: first-use class lookups
+    py4j_round_trips.reset()
+    kept, total = prune_rotated(spark, tmpdir, 100 * 600_000, 199 * 600_000)
+    assert py4j_round_trips.n <= 30, py4j_round_trips.n
+    assert total == 1000
+    assert kept == list(range(100, 200))

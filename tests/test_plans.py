@@ -1120,9 +1120,9 @@ _BENCH_PLAN_SHAPES = {
     # physical choice there, pinned so it neither multiplies nor
     # silently becomes a broadcast of the big side
     "x_merge_upsert": dict(shuffles=3, broadcasts=0, smj=1),
-    # r16: +REBALANCE barrier materializing the banded signatures once
-    # (the broadcast build side otherwise re-tokenizes the corpus) and
-    # the distinct/sort exchanges
+    # the signature aggregate's exchange on each self-join side (one
+    # shuffle at run time: AQE reuses it, so the corpus is tokenized
+    # once) plus the distinct/sort exchanges
     "x_minhash_neardup": dict(shuffles=4, broadcasts=1, smj=0),
     "x_training_prep": dict(shuffles=2, broadcasts=2, smj=0),
 }
